@@ -1,24 +1,32 @@
-"""Persisted index artifacts (VERDICT r4 #6): the near-dup pair
-graph, LSH band indexes, and trained PQ codebooks are INDEXES — at
-100 TB they are built once, stored, and probed by every later query
-and ingest delta. The session-dict caches the operators used through
-round 4 die with the SparkContext; this module gives them a disk
-tier: parquet artifacts under ``_artifacts/`` keyed by a corpus
-FINGERPRINT, so a second session (or a second process) reuses the
-index instead of recomputing it, and an ingest delta can probe an
-index built days earlier.
+"""Corpus-derived operator state in two tiers.
 
-Fingerprint = md5 over each source parquet file's (path, size,
-mtime) — the standard "did the input change" key (content hashing
-would scan the corpus the artifact exists to avoid). Any rewrite of
-the source invalidates the key and the next call rebuilds.
+**Disk tier** (``load_or_build`` / ``load_or_build_bucketed``): the
+near-dup pair graph, LSH band indexes, trained PQ codebooks and the
+other derived tables are INDEXES: at 100 TB they are built once,
+stored, and probed by every later query and ingest delta. Each is a
+parquet directory under ``_artifacts/<kind>/<fingerprint>``, so a
+second session or process reuses it instead of recomputing it.
+Parquet preserves float64 bit patterns, so reuse cannot perturb the
+oracle hashes. ``ARTIFACT_EVENTS`` records (kind, "build" | "reuse")
+per disk-tier call; the manifest stamps usage for ``gc_artifacts``.
 
-Parquet preserves float64 bit patterns exactly, so artifact reuse
-cannot perturb the engine-exact guarantees (oracle hashes are
-unchanged whether an index was built or loaded).
+**Session tier** (``session_cached``): one in-process store for the
+state a query should not rebuild per call within a SparkContext:
+persisted frames over disk artifacts, localCheckpointed shortlists,
+collected model state. An entry is keyed on
+``(name, applicationId, sf_dir, fingerprint)``; a new fingerprint
+for the same (name, application, dir) evicts the older entry and
+unpersists it. ``clear`` drops entries for tests. Session hits do
+not touch ``ARTIFACT_EVENTS``.
 
-``ARTIFACT_EVENTS`` records (kind, "build" | "reuse") per call — the
-observability hook the reuse tests assert on.
+**Fingerprint** = md5 over each source table's parquet files'
+(path, size, mtime): metadata-only and rewrite-sensitive. A rewrite
+of the source misses both tiers, and the next call rebuilds. A
+raw-path key would serve stale state after an in-session rewrite.
+The one exception is the IVF quantizer, cached with no tables and
+so with a constant fingerprint: an IVF index trains once and then
+adds vectors to the frozen cells (train-once/add-many), so an
+append to ``embeddings`` must not retrain it.
 """
 
 from __future__ import annotations
@@ -29,6 +37,7 @@ import os
 import shutil
 import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from dbt_eamples_spark.catalog import table_path
@@ -70,25 +79,44 @@ def corpus_fingerprint(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()[:16]
 
 
-def session_cache_key(
-    cache: dict, spark: SparkSession, sf_dir: str, fingerprint: str
-) -> tuple[str, str, str]:
-    """Key for the operators' L1 session-dict caches: (applicationId,
-    sf_dir, corpus fingerprint). Including the fingerprint means an
-    in-session rewrite of a fixture table misses the cache and falls
-    through to the L2 artifact layer, which already rebuilds on
-    fingerprint change (ADVICE r8: the old (app, dir) key served
-    stale persisted frames across a rewrite). Stale same-(app, dir)
-    entries are evicted and unpersisted so a rewrite doesn't leak
-    the superseded frame's storage."""
-    key = (spark.sparkContext.applicationId, sf_dir, fingerprint)
-    for k in [k for k in cache if k[:2] == key[:2] and k != key]:
-        old = cache.pop(k)
+# session tier: (name, applicationId, sf_dir, fingerprint) -> payload
+_SESSION_STATE: dict[tuple[str, str, str, str], object] = {}
+
+
+def session_cached(
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...], name: str, make
+):
+    """Return the session entry ``name`` for the current fingerprint
+    of ``tables`` under ``sf_dir``, calling ``make(fingerprint)``
+    only on a miss. A miss first evicts the entry of the same name,
+    application and dir that an older fingerprint left behind. No
+    lock or iteration is held while ``make`` runs: builds call other
+    cached getters."""
+    fp = corpus_fingerprint(sf_dir, *tables)
+    key = (name, spark.sparkContext.applicationId, sf_dir, fp)
+    hit = _SESSION_STATE.get(key)
+    if hit is not None:
+        return hit
+    for k in [k for k in _SESSION_STATE if k[:3] == key[:3]]:
+        _release(_SESSION_STATE.pop(k, None))
+    value = make(fp)
+    _SESSION_STATE[key] = value
+    return value
+
+
+def clear(*names: str) -> None:
+    """Drop the session entries called ``names`` (all entries when
+    none are given), unpersisting DataFrame payloads."""
+    for k in [k for k in _SESSION_STATE if not names or k[0] in names]:
+        _release(_SESSION_STATE.pop(k, None))
+
+
+def _release(payload) -> None:
+    if isinstance(payload, DataFrame):
         try:
-            old.unpersist()
-        except Exception:
-            pass  # non-DataFrame payloads (codebook lists) or dead contexts
-    return key
+            payload.unpersist()
+        except Py4JError:
+            pass  # its SparkContext is already stopped
 
 
 def artifact_path(kind: str, fingerprint: str) -> str:

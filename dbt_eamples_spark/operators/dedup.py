@@ -34,6 +34,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbt_eamples_spark.artifacts import (
+    corpus_fingerprint,
+    load_or_build,
+    session_cached,
+)
 from dbt_eamples_spark.catalog import load_table
 
 # MinHash parameters: 12 hashes in 3 bands of 4 → catches J≳0.7 pairs
@@ -79,35 +84,21 @@ def _shingles(df: DataFrame, *carry: str) -> DataFrame:
 # md5) instead of a full re-tokenize. At 100 TB the tokenize pass
 # is the dominant scan cost — paying it once per corpus instead of
 # once per query is the entire point of the artifact layer.
-_DOC_SHINGLES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, shingles) — each document's DISTINCT
     word-3-shingle array with its source attached, artifact-backed
-    per documents fingerprint (L1 session dict over the L2 parquet
+    per documents fingerprint (a session entry over the parquet
     store, the span_profile two-tier shape)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents", parallelize=True)
+        return _shingles(docs.select("doc_id", "source", "text"), "source")
+
+    return session_cached(
+        spark, sf_dir, ("documents",), "doc_shingles",
+        lambda fp: load_or_build(spark, "doc_shingles", fp, build).persist(),
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_DOC_SHINGLES_CACHE, spark, sf_dir, fp)
-    df = _DOC_SHINGLES_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            docs = load_table(
-                spark, sf_dir, "documents", parallelize=True
-            )
-            return _shingles(
-                docs.select("doc_id", "source", "text"), "source"
-            )
-
-        df = load_or_build(spark, "doc_shingles", fp, build).persist()
-        _DOC_SHINGLES_CACHE[key] = df
-    return df
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,28 +402,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_pairs(spark, sf_dir)
 
 
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_NGRAM_PAIRS_CACHE, spark, sf_dir, fp)
-    df = _NGRAM_PAIRS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "ngram_jaccard_pairs",
-            fp,
+    return session_cached(
+        spark, sf_dir, ("documents",), "ngram_jaccard_pairs",
+        lambda fp: load_or_build(
+            spark, "ngram_jaccard_pairs", fp,
             lambda: _ngram_jaccard_pairs_build(spark, sf_dir),
-        ).persist()
-        _NGRAM_PAIRS_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 NGRAM_PAIR_TAU = 0.3  # pair-table floor: keep candidates down to weak-dup
@@ -462,34 +439,22 @@ def _pair_jaccard():
     )
 
 
-_NGRAM_BLOCK_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _ngram_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, blk) — the persisted corpus-side blocking index of
     the ngram-Jaccard pair graph (round 9): an ingest delta probes
     it with delta-side keys only, never re-hashing the corpus (the
     minhash_band_index pattern at one hash per doc)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    def build() -> DataFrame:
+        return doc_shingles(spark, sf_dir).select(
+            "doc_id", _blk_col().alias("blk")
+        )
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_NGRAM_BLOCK_INDEX_CACHE, spark, sf_dir, fp)
-    df = _NGRAM_BLOCK_INDEX_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return doc_shingles(spark, sf_dir).select(
-                "doc_id", _blk_col().alias("blk")
-            )
-
-        df = load_or_build(
+    return session_cached(
+        spark, sf_dir, ("documents",), "ngram_block_index",
+        lambda fp: load_or_build(
             spark, "ngram_block_index", fp, build
-        ).persist()
-        _NGRAM_BLOCK_INDEX_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def _ngram_jaccard_pairs_build(
@@ -553,8 +518,6 @@ def ngram_pairs_apply_delta(
     ValueError loudly; a caller that already guarantees freshness
     (e.g. the watermarked ingest loop, whose anti-join IS that
     guarantee) can skip the probe with ``assume_new_ids=True``."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     base_pairs = _ngram_pairs(spark, sf_dir).select(
         "doc_a", "doc_b", "jaccard"
     )
@@ -1204,11 +1167,6 @@ def minhash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index an LSH deployment keeps warm. At scale this artifact
     is a bucketed table on (band, bucket); here it is the plain
     parquet the fixture needs."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-    )
-
     def build() -> DataFrame:
         corpus = doc_shingles(spark, sf_dir).filter(
             ~(F.col("doc_id") % INCR_MOD == 0)
@@ -1247,8 +1205,6 @@ def minhash_band_index_apply_delta(
     the same (kind, fingerprint) key, breaking the
     fingerprint→content invariant and silently adding new×new
     candidate pairs to later incremental runs."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     base = minhash_band_index(spark, sf_dir)
     new_keys = _band_keys(
         _shingles(
@@ -1335,9 +1291,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_delta_artifacts.py, incl. the two-existing-clusters
 # merge fixture).
 
-_MINHASH_BAND_INDEX_FULL_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def minhash_band_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band, bucket) over ALL docs of the dir — the
     persisted index backing incremental CLUSTER maintenance. Unlike
@@ -1345,28 +1298,17 @@ def minhash_band_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture batch to model an ingest), the cluster pair graph covers
     the whole corpus, so its delta probe needs keys for every base
     doc."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    def build() -> DataFrame:
+        return _band_keys(
+            doc_shingles(spark, sf_dir).select("doc_id", "shingles")
+        )
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(
-        _MINHASH_BAND_INDEX_FULL_CACHE, spark, sf_dir, fp
-    )
-    df = _MINHASH_BAND_INDEX_FULL_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return _band_keys(
-                doc_shingles(spark, sf_dir).select("doc_id", "shingles")
-            )
-
-        df = load_or_build(
+    return session_cached(
+        spark, sf_dir, ("documents",), "minhash_band_index_full",
+        lambda fp: load_or_build(
             spark, "minhash_band_index_full", fp, build
-        ).persist()
-        _MINHASH_BAND_INDEX_FULL_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def dedup_incremental_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,8 +1382,6 @@ def doc_shingles_apply_delta(
     """Delta-maintain the shared ``doc_shingles`` artifact: tokenize
     the delta only, append — per-doc state, row-identical to a
     rebuild over base ∪ delta by construction."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     merged = doc_shingles(spark, sf_dir).unionByName(
         _shingles(
             delta_docs.select("doc_id", "source", "text"), "source"
@@ -1462,8 +1402,6 @@ def ngram_block_index_apply_delta(
 ) -> DataFrame:
     """Delta-maintain the ``ngram_block_index`` (doc_id, blk)
     blocking artifact — a pure per-doc append."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     merged = _ngram_block_index(spark, sf_dir).unionByName(
         _shingles(delta_docs.select("doc_id", "text")).select(
             "doc_id", _blk_col().alias("blk")
@@ -1486,8 +1424,6 @@ def minhash_band_index_full_apply_delta(
     """Delta-maintain :func:`minhash_band_index_full` — a pure
     per-doc append (NO %INCR_MOD filter: the full index covers every
     doc by definition)."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     merged = minhash_band_index_full(spark, sf_dir).unionByName(
         _band_keys(_shingles(delta_docs.select("doc_id", "text")))
     )
@@ -1787,8 +1723,6 @@ def cluster_verdicts_apply_delta(
     corpus (flat delta vs corpus-sized rebuild at sf1)."""
     import warnings
 
-    from dbt_eamples_spark.artifacts import load_or_build
-
     n_corpus = load_table(
         spark, sf_dir, "documents"
     ).count()
@@ -1856,9 +1790,6 @@ def _band_self_pairs(keys: DataFrame) -> DataFrame:
     )
 
 
-_CLUSTER_LABELS_BASE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _cluster_labels_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) — the persisted CC labeling of the
     BASE-corpus (doc_id % INCR_MOD != 0) pair graph, the warm label
@@ -1868,33 +1799,24 @@ def _cluster_labels_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental query's WARM cost is two artifact scans plus
     delta-sized work — the production shape, like the band index
     behind dedup_incremental_minhash."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    def build() -> DataFrame:
+        keys = minhash_band_index(spark, sf_dir).select(
+            F.col("corpus_doc").alias("doc_id"), "band", "bucket"
+        )
+        pairs = _verify_pairs(
+            spark, sf_dir, _band_self_pairs(keys)
+        ).localCheckpoint(eager=True)
+        return _min_label_propagation(pairs, "doc_a", "doc_b").select(
+            F.col("node").alias("doc_id"),
+            F.col("comp").alias("cluster_id"),
+        )
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_CLUSTER_LABELS_BASE_CACHE, spark, sf_dir, fp)
-    df = _CLUSTER_LABELS_BASE_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            keys = minhash_band_index(spark, sf_dir).select(
-                F.col("corpus_doc").alias("doc_id"), "band", "bucket"
-            )
-            pairs = _verify_pairs(
-                spark, sf_dir, _band_self_pairs(keys)
-            ).localCheckpoint(eager=True)
-            return _min_label_propagation(pairs, "doc_a", "doc_b").select(
-                F.col("node").alias("doc_id"),
-                F.col("comp").alias("cluster_id"),
-            )
-
-        df = load_or_build(
+    return session_cached(
+        spark, sf_dir, ("documents",), "cluster_labels_base",
+        lambda fp: load_or_build(
             spark, "cluster_labels_base", fp, build
-        ).persist()
-        _CLUSTER_LABELS_BASE_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2124,35 +2046,21 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # verified-pair cache: the near-dup pair graph is an INDEX — built
 # once, consumed by both the pairwise query and the cluster closure.
-# Two tiers (round 5): an in-session dict holding the checkpointed
-# frame, over the PERSISTED parquet artifact keyed by corpus
-# fingerprint (dbt_eamples_spark.artifacts) — so a second session or
-# process reuses the index instead of re-running the LSH blocking +
-# exact verify, which is the 100 TB operating model.
-_COSINE_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# Two tiers: the checkpointed frame in the session store, over the
+# PERSISTED parquet artifact keyed by corpus fingerprint — so a
+# second session or process reuses the index instead of re-running
+# the LSH blocking + exact verify, which is the 100 TB operating
+# model.
 def _cosine_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "embeddings")
-    key = session_cache_key(_COSINE_PAIRS_CACHE, spark, sf_dir, fp)
-    df = _COSINE_PAIRS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "cosine_pairs",
-            fp,
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "cosine_pairs",
+        lambda fp: load_or_build(
+            spark, "cosine_pairs", fp,
             lambda: dedup_embedding_cosine(spark, sf_dir).select(
                 "vec_a", "vec_b"
             ),
-        ).localCheckpoint(eager=True)
-        _COSINE_PAIRS_CACHE[key] = df
-    return df
+        ).localCheckpoint(eager=True),
+    )
 
 
 def text_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2228,12 +2136,9 @@ def _doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-hash distinct-doc exchange are the dominant cost of all three
 # span consumers (dedup_substring_spans, dedup_top_spans, and the
 # cascade's stage-3 tier), so both derived tables persist once per
-# documents-corpus fingerprint — L2 parquet artifact + L1 session
-# cache, the minhash-band-index precedent. A production cascade
-# reads persisted per-stage verdict tables; this is that shape.
-_SPAN_PROFILE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_SPAN_DUP_STATS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_CLUSTER_VERDICTS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# documents-corpus fingerprint — parquet artifact + session entry,
+# the minhash-band-index precedent. A production cascade reads
+# persisted per-stage verdict tables; this is that shape.
 
 
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2246,26 +2151,15 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`cluster_verdicts_apply_delta` relabel touched components
     without a rebuild. (New artifact kind — the old 2-column
     ``cluster_verdicts`` dirs are orphans the GC reclaims.)"""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_CLUSTER_VERDICTS_CACHE, spark, sf_dir, fp)
-    df = _CLUSTER_VERDICTS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "cluster_labels",
-            fp,
+    return session_cached(
+        spark, sf_dir, ("documents",), "cluster_labels",
+        lambda fp: load_or_build(
+            spark, "cluster_labels", fp,
             lambda: dedup_clusters(spark, sf_dir).select(
                 "doc_id", "cluster_id", "keep"
             ),
-        ).persist()
-        _CLUSTER_VERDICTS_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def _cluster_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2277,63 +2171,43 @@ def _cluster_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_spans, n_dup_spans) for every doc with ≥1 span —
     the persisted per-doc span verdict table."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    def build() -> DataFrame:
+        # rides the persisted span indexes (round 9): one tokenize
+        # pass serves all four span artifacts
+        spans = _doc_span_index(spark, sf_dir)
+        stats = _span_hash_index(spark, sf_dir).select(
+            "h", F.col("n_docs").alias("nd")
+        )
+        return (
+            spans.join(stats, "h")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").cast("long").alias("n_spans"),
+                F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
+                .cast("long")
+                .alias("n_dup_spans"),
+            )
+        )
+
+    return session_cached(
+        spark, sf_dir, ("documents",), "span_profile",
+        lambda fp: load_or_build(spark, "span_profile", fp, build).persist(),
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_PROFILE_CACHE, spark, sf_dir, fp)
-    df = _SPAN_PROFILE_CACHE.get(key)
-    if df is None:
-
-        def build() -> DataFrame:
-            # rides the persisted span indexes (round 9): one
-            # tokenize pass serves all four span artifacts
-            spans = _doc_span_index(spark, sf_dir)
-            stats = _span_hash_index(spark, sf_dir).select(
-                "h", F.col("n_docs").alias("nd")
-            )
-            return (
-                spans.join(stats, "h")
-                .groupBy("doc_id")
-                .agg(
-                    F.count("*").cast("long").alias("n_spans"),
-                    F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
-                    .cast("long")
-                    .alias("n_dup_spans"),
-                )
-            )
-
-        df = load_or_build(spark, "span_profile", fp, build).persist()
-        _SPAN_PROFILE_CACHE[key] = df
-    return df
 
 
 def _span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(h, n_docs, n_occurrences) for span hashes in >1 distinct doc
     — the persisted corpus-level duplicated-span table (the nd ≤ 1
     tail, the overwhelming bulk, never persists)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_DUP_STATS_CACHE, spark, sf_dir, fp)
-    df = _SPAN_DUP_STATS_CACHE.get(key)
-    if df is None:
-
-        def build() -> DataFrame:
-            return _span_hash_index(spark, sf_dir).filter(
+    return session_cached(
+        spark, sf_dir, ("documents",), "span_dup_stats",
+        lambda fp: load_or_build(
+            spark, "span_dup_stats", fp,
+            lambda: _span_hash_index(spark, sf_dir).filter(
                 F.col("n_docs") > 1
-            )
-
-        df = load_or_build(spark, "span_dup_stats", fp, build).persist()
-        _SPAN_DUP_STATS_CACHE[key] = df
-    return df
+            ),
+        ).persist(),
+    )
 
 
 # Delta maintenance for the span family (round 9, extending VERDICT
@@ -2346,8 +2220,6 @@ def _span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # singletons included — required because a delta span hitting a base
 # SINGLETON hash flips that base holder's instances to duplicated,
 # which the >1-filtered span_dup_stats artifact cannot see).
-_DOC_SPAN_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_SPAN_HASH_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _delta_doc_spans(delta_docs: DataFrame) -> DataFrame:
@@ -2368,49 +2240,33 @@ def _delta_doc_spans(delta_docs: DataFrame) -> DataFrame:
 
 def _doc_span_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, h) span-instance table."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_DOC_SPAN_INDEX_CACHE, spark, sf_dir, fp)
-    df = _DOC_SPAN_INDEX_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
+    return session_cached(
+        spark, sf_dir, ("documents",), "doc_span_index",
+        lambda fp: load_or_build(
             spark, "doc_span_index", fp,
             lambda: _doc_spans(spark, sf_dir),
-        ).persist()
-        _DOC_SPAN_INDEX_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def _span_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted UNfiltered (h, n_docs, n_occurrences) stats."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_HASH_INDEX_CACHE, spark, sf_dir, fp)
-    df = _SPAN_HASH_INDEX_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return (
-                _doc_span_index(spark, sf_dir)
-                .groupBy("h")
-                .agg(
-                    F.countDistinct("doc_id").cast("long").alias("n_docs"),
-                    F.count("*").cast("long").alias("n_occurrences"),
-                )
+    def build() -> DataFrame:
+        return (
+            _doc_span_index(spark, sf_dir)
+            .groupBy("h")
+            .agg(
+                F.countDistinct("doc_id").cast("long").alias("n_docs"),
+                F.count("*").cast("long").alias("n_occurrences"),
             )
+        )
 
-        df = load_or_build(spark, "span_hash_index", fp, build).persist()
-        _SPAN_HASH_INDEX_CACHE[key] = df
-    return df
+    return session_cached(
+        spark, sf_dir, ("documents",), "span_hash_index",
+        lambda fp: load_or_build(
+            spark, "span_hash_index", fp, build
+        ).persist(),
+    )
 
 
 def span_artifacts_apply_delta(
@@ -2446,8 +2302,6 @@ def span_artifacts_apply_delta(
 
     ``publish_fingerprint`` publishes BOTH merged artifacts (and the
     two merged indexes) under the union corpus's fingerprint."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     d_spans = _delta_doc_spans(
         delta_docs.select("doc_id", "text")
     ).localCheckpoint(eager=True)  # delta-sized; 3 consumers
@@ -2889,10 +2743,6 @@ def cosine_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays BASE keys per vector (the one-sided multi-probe contract
     of dedup_embedding_cosine: the probe side grows, the index
     doesn't)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-    )
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
         _as_double_vec,
@@ -2954,7 +2804,6 @@ def cosine_base_index_apply_delta(
     are ×2 in corpus size — and detected exactly, never silently
     wrong). Both paths are pytest-locked row-identical to a
     from-scratch build over the union."""
-    from dbt_eamples_spark.artifacts import load_or_build
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
         _as_double_vec,

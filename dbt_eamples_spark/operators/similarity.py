@@ -27,11 +27,15 @@ results bit-reproducible against the DuckDB oracle.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbt_eamples_spark.artifacts import (
+    corpus_fingerprint,
+    load_or_build,
+    session_cached,
+)
 from dbt_eamples_spark.catalog import load_table
 
 N_QUERIES = 10  # query set: vec_id < 10
@@ -201,33 +205,31 @@ def _kmeans_centroids(emb: DataFrame, ncells: int = NCENTROIDS) -> DataFrame:
     return cent
 
 
-# trained-centroid cache, keyed by (spark application, corpus): an
-# IVF index is BUILT once and searched many times — queries must not
-# pay the training cost per call. The cached value is the tiny
-# checkpointed centroid frame (≤ NCENTROIDS rows), valid for the
-# lifetime of the SparkContext that checkpointed it.
-_IVF_CENTROIDS: dict[tuple[str, str, int], DataFrame] = {}
-
-# collected centroid VALUES (r15): the assignment/probe rewrite
-# consumes centroids as literal arrays (see _nearest_cells), so the
-# ≤ NCENTROIDS-row frame is collected once per (application, corpus)
-# next to the frame cache — bounded model state, the same class as
-# the PQ codebooks that have always lived driver-side.
-_IVF_CENT_VALS: dict[tuple, list] = {}
-
-
-def _cent_vals(cent: DataFrame, cache_key: tuple | None = None) -> list:
+def _cent_vals(cent: DataFrame) -> list:
     """[(cent_id, (c0, ..., c63)), ...] sorted by cent_id, collected
     from a bounded centroid frame (≤ ncells rows — model state)."""
-    if cache_key is not None and cache_key in _IVF_CENT_VALS:
-        return _IVF_CENT_VALS[cache_key]
-    vals = sorted(
+    return sorted(
         (int(r[0]), tuple(float(x) for x in r[1]))
         for r in cent.select("cent_id", "cvec").collect()
     )
-    if cache_key is not None:
-        _IVF_CENT_VALS[cache_key] = vals
-    return vals
+
+
+def _ivf_quantizer(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, ncells: int
+) -> list:
+    """Centroid values of the session's IVF quantizer over
+    ``sf_dir``, trained on ``emb`` on first use. An IVF index is
+    BUILT once and searched many times, so queries must not pay the
+    training cost per call; the assignment/probe consume centroids
+    as literal arrays (see _nearest_cells), so the entry holds the
+    collected values — bounded model state, the same class as the PQ
+    codebooks. Keyed on no tables (train-once/add-many): vectors
+    appended to ``embeddings`` join the frozen cells and never
+    retrain them."""
+    return session_cached(
+        spark, sf_dir, (), f"ivf_quantizer/{ncells}",
+        lambda _fp: _cent_vals(_kmeans_centroids(emb, ncells)),
+    )
 
 
 def _nearest_cells(vec_col, cents: list, n: int, with_cvec: bool = False):
@@ -329,19 +331,13 @@ def similarity_ivf_topk(
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
     )
-    nc = ncells or NCENTROIDS
-    cache_key = (spark.sparkContext.applicationId, sf_dir, nc)
-    cent = _IVF_CENTROIDS.get(cache_key)
-    if cent is None:
-        cent = _kmeans_centroids(emb, nc)
-        _IVF_CENTROIDS[cache_key] = cent
+    cents = _ivf_quantizer(spark, sf_dir, emb, ncells or NCENTROIDS)
 
     # nearest-centroid assignment for every vector: a NARROW literal
     # argmin (r15, guide §2.4 — the old cross-join + row_number
     # window shuffled corpus×ncells rows and sorted them to pick a
     # per-row function of bounded model state; see _nearest_cells
     # for the total-order identity argument)
-    cents = _cent_vals(cent, cache_key)
     assigned = emb.select(
         "vec_id",
         "vec",
@@ -1094,7 +1090,7 @@ def similarity_pq_topk(
         # frame both consume (rk ≤ TOP_K is a prefix of rk ≤ 50
         # under the same (adc_dist, neighbor_id) total order, so
         # every emitted row is unchanged). |Q|·PQ_RERANK rows of
-        # session state, the _EXACT_TOPK_CACHE discipline.
+        # session state, cached like the recall gates' exact leg.
         ranked = _adc_ranked_shortlist(spark, sf_dir)
         if not rerank:
             return ranked.filter(F.col("rk") <= TOP_K).select(
@@ -1205,24 +1201,11 @@ def _pq_refine(short: DataFrame, q: DataFrame, emb: DataFrame) -> DataFrame:
 # VERDICT r14 #6: the trained-ADC ranked shortlist is built ONCE per
 # (application, corpus) and shared by similarity_pq_topk /
 # similarity_pq_rerank_topk / similarity_rerank_recall_eval — the
-# _EXACT_TOPK_CACHE discipline (|Q|·PQ_RERANK rows of session state,
-# localCheckpointed; the oracle re-validates every consumer's values
-# each run).
-_ADC_SHORTLIST_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# exact-top-k session entry's discipline (|Q|·PQ_RERANK rows of
+# session state, localCheckpointed; the oracle re-validates every
+# consumer's values each run).
 def _adc_ranked_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        session_cache_key,
-    )
-
-    key = session_cache_key(
-        _ADC_SHORTLIST_CACHE, spark, sf_dir,
-        corpus_fingerprint(sf_dir, "embeddings"),
-    )
-    ranked = _ADC_SHORTLIST_CACHE.get(key)
-    if ranked is None:
+    def make(_fp) -> DataFrame:
         books = [
             dict(book) for book in _pq_train_codebooks(spark, sf_dir)
         ]
@@ -1235,24 +1218,23 @@ def _adc_ranked_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = emb.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
         )
-        ranked = (
+        return (
             _adc_ranked(codes, q, books, max(TOP_K, PQ_RERANK))
             .filter(F.col("rk") <= max(TOP_K, PQ_RERANK))
             .localCheckpoint(eager=True)
         )
-        _ADC_SHORTLIST_CACHE[key] = ranked
-    return ranked
+
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "adc_shortlist", make
+    )
 
 
-# trained-PQ codebook cache: training is an INDEX build — once per
-# (session, corpus), like _IVF_CENTROIDS. Value: {s: [[floats]]}
 PQ_TRAIN_ITERS = 2
 # ADC shortlist size for the refine (exact-rerank) stage: the
 # expensive full-width cosine touches |Q|·PQ_RERANK vectors only.
 # Measured on the uniform fixture (RECALL.md §PQ): trained ADC top-5
 # recall 0.24 → 0.68 with rerank=50 at ~1% of the corpus re-scored.
 PQ_RERANK = 50
-_PQ_CODEBOOKS: dict[tuple[str, str, str], list[list[tuple[int, list[float]]]]] = {}
 
 
 def _l2sq(a, b):
@@ -1327,44 +1309,41 @@ def _pq_train_codebooks(
     the first PQ_CODES subvectors. The result is collected — model
     state bounded at PQ_SUBVECTORS·PQ_CODES·PQ_SUBDIM doubles (2 KB)
     — so the ENCODE pass stays a zero-shuffle literal fold exactly
-    like the untrained path."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    like the untrained path. Training is an INDEX build: the books
+    are cached per session and corpus, over the parquet tier."""
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "pq_codebooks",
+        lambda fp: _stored_books(
+            spark, "pq_codebooks", fp,
+            lambda: _pq_train_books(spark, sf_dir),
+        ),
     )
 
-    fp = corpus_fingerprint(sf_dir, "embeddings")
-    key = session_cache_key(_PQ_CODEBOOKS, spark, sf_dir, fp)
-    cached = _PQ_CODEBOOKS.get(key)
-    if cached is not None:
-        return cached
-    # disk tier (round 5): codebooks persist as a (s, k, cvec)
-    # parquet artifact keyed by corpus fingerprint — training is an
-    # index build, and parquet float64 is bit-preserving, so a
-    # loaded codebook scores identically to a trained one
-    art = load_or_build(
+
+def _stored_books(
+    spark: SparkSession, kind: str, fingerprint: str, train
+) -> list[list[tuple[int, list[float]]]]:
+    """Codebooks through the (s, k, cvec) parquet artifact ``kind``,
+    trained with ``train()`` only on a cold store. Parquet float64
+    is bit-preserving, so loaded books score identically to trained
+    ones."""
+    rows = load_or_build(
         spark,
-        "pq_codebooks",
-        fp,
+        kind,
+        fingerprint,
         lambda: spark.createDataFrame(
             [
                 (s, k, vals)
-                for s, book in enumerate(_pq_train_books(spark, sf_dir))
+                for s, book in enumerate(train())
                 for k, vals in book
             ],
             "s int, k int, cvec array<double>",
         ),
-    )
-    rows = art.collect()
-    books = [
-        sorted(
-            (r["k"], list(r["cvec"])) for r in rows if r["s"] == s
-        )
+    ).collect()
+    return [
+        sorted((r["k"], list(r["cvec"])) for r in rows if r["s"] == s)
         for s in range(PQ_SUBVECTORS)
     ]
-    _PQ_CODEBOOKS[key] = books
-    return books
 
 
 def _pq_train_books(
@@ -1511,16 +1490,11 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
     )
-    cache_key = (spark.sparkContext.applicationId, sf_dir, NCENTROIDS)
-    cent = _IVF_CENTROIDS.get(cache_key)
-    if cent is None:
-        cent = _kmeans_centroids(emb, NCENTROIDS)
-        _IVF_CENTROIDS[cache_key] = cent
+    cents = _ivf_quantizer(spark, sf_dir, emb, NCENTROIDS)
 
     # narrow literal argmin/arg-top-NPROBE instead of the cross-join
     # + window shape (r15, guide §2.4; identity argument at
     # _nearest_cells)
-    cents = _cent_vals(cent, cache_key)
     assigned = emb.select(
         "vec_id",
         F.explode(
@@ -1595,74 +1569,54 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# residual-PQ codebook cache (books trained on vec − cell centroid)
-_PQ_RES_CODEBOOKS: dict[tuple[str, str, str], list[list[tuple[int, list[float]]]]] = {}
-
-# residual CODE TABLE cache (r15): the coded corpus (vec_id, bucket,
+# residual CODE TABLE (r15): the coded corpus (vec_id, bucket,
 # code_0..3) IS the stored IVFPQ index — FAISS keeps exactly this in
 # its inverted lists; re-deriving it per query invocation re-paid
 # 4×PQ_CODES l2 folds per corpus row. Built once per (application,
-# corpus) and localCheckpointed (5 small ints per vector). Same
-# model-state class as _IVF_CENTROIDS / _PQ_RES_CODEBOOKS; the
-# oracle re-validates every consumer's values each run.
-_RES_CODED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# corpus) and localCheckpointed (5 small ints per vector), the same
+# model-state class as the IVF quantizer and the residual codebooks;
+# the oracle re-validates every consumer's values each run.
 def _res_coded_cached(
     spark: SparkSession, sf_dir: str, residuals: DataFrame, books: list
 ) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        session_cache_key,
-    )
+    def make(_fp) -> DataFrame:
+        bk = _books_key(books)
+        return residuals.select(
+            "vec_id",
+            "bucket",
+            *[
+                _pq_best_sql("vec", s, bk).alias(f"b{s}")
+                for s in range(PQ_SUBVECTORS)
+            ],
+        ).select(
+            "vec_id",
+            "bucket",
+            *[
+                F.col(f"b{s}.k").cast("int").alias(f"code_{s}")
+                for s in range(PQ_SUBVECTORS)
+            ],
+        ).localCheckpoint(eager=True)
 
-    key = session_cache_key(
-        _RES_CODED_CACHE, spark, sf_dir,
-        corpus_fingerprint(sf_dir, "embeddings"),
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "res_coded", make
     )
-    coded = _RES_CODED_CACHE.get(key)
-    if coded is not None:
-        return coded
-
-    bk = _books_key(books)
-    coded = residuals.select(
-        "vec_id",
-        "bucket",
-        *[
-            _pq_best_sql("vec", s, bk).alias(f"b{s}")
-            for s in range(PQ_SUBVECTORS)
-        ],
-    ).select(
-        "vec_id",
-        "bucket",
-        *[
-            F.col(f"b{s}.k").cast("int").alias(f"code_{s}")
-            for s in range(PQ_SUBVECTORS)
-        ],
-    ).localCheckpoint(eager=True)
-    _RES_CODED_CACHE[key] = coded
-    return coded
 
 
 def _residual_frames(spark: SparkSession, sf_dir: str):
-    """(emb, assigned-with-centroid, residuals) shared by the
-    residual-IVFPQ train/encode/search stages. assigned keeps the
-    centroid VECTOR because the residual is vec − centroid(cell)."""
+    """(emb, centroid values, assigned-with-centroid, residuals)
+    shared by the residual-IVFPQ train/encode/search stages.
+    assigned keeps the centroid VECTOR because the residual is
+    vec − centroid(cell)."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
     )
-    cache_key = (spark.sparkContext.applicationId, sf_dir, NCENTROIDS)
-    cent = _IVF_CENTROIDS.get(cache_key)
-    if cent is None:
-        cent = _kmeans_centroids(emb, NCENTROIDS)
-        _IVF_CENTROIDS[cache_key] = cent
+    cents = _ivf_quantizer(spark, sf_dir, emb, NCENTROIDS)
     # narrow literal argmin carrying the winning centroid VECTOR
     # (the residual is vec − centroid(cell)); r15 rewrite of the
     # cross-join + window shape — identity argument at
     # _nearest_cells. inline() = ONE Generate evaluating the argmin
     # once per row (element_at references would re-evaluate it per
     # column and under pushed join-key filters — see helper)
-    cents = _cent_vals(cent, cache_key)
     assigned = emb.select(
         "vec_id",
         "vec",
@@ -1673,53 +1627,23 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
         "bucket",
         F.zip_with("vec", "cvec", lambda x, c: x - c).alias("vec"),
     )
-    return emb, cent, assigned, residuals
+    return emb, cents, assigned, residuals
 
 
 def _pq_res_codebooks(
     spark: SparkSession, sf_dir: str
 ) -> list[list[tuple[int, list[float]]]]:
     """Residual-trained PQ codebooks — the same fixed-point Lloyd
-    core over (vec − centroid) vectors, with the same session-dict +
+    core over (vec − centroid) vectors, with the same session-entry +
     parquet-artifact tiers as the raw-vector books."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    def train():
+        residuals = _residual_frames(spark, sf_dir)[3]
+        return _pq_train_books_from(residuals.select("vec_id", "vec"))
 
-    fp = corpus_fingerprint(sf_dir, "embeddings")
-    key = session_cache_key(_PQ_RES_CODEBOOKS, spark, sf_dir, fp)
-    cached = _PQ_RES_CODEBOOKS.get(key)
-    if cached is not None:
-        return cached
-
-    def build():
-        _, _, _, residuals = _residual_frames(spark, sf_dir)
-        books = _pq_train_books_from(
-            residuals.select("vec_id", "vec")
-        )
-        return spark.createDataFrame(
-            [
-                (s, k, vals)
-                for s, book in enumerate(books)
-                for k, vals in book
-            ],
-            "s int, k int, cvec array<double>",
-        )
-    art = load_or_build(
-        spark,
-        "pq_codebooks_residual",
-        fp,
-        build,
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "pq_codebooks_residual",
+        lambda fp: _stored_books(spark, "pq_codebooks_residual", fp, train),
     )
-    rows = art.collect()
-    books = [
-        sorted((r["k"], list(r["cvec"])) for r in rows if r["s"] == s)
-        for s in range(PQ_SUBVECTORS)
-    ]
-    _PQ_RES_CODEBOOKS[key] = books
-    return books
 
 
 def similarity_ivf_pq_residual_topk(
@@ -1744,10 +1668,7 @@ def similarity_ivf_pq_residual_topk(
     Scale shape: identical to `similarity_ivf_pq_topk` — broadcast
     centroids, cell-restricted coded scan, |Q|·PQ_RERANK full-width
     refine — plus one narrow residual map."""
-    emb, cent, assigned, residuals = _residual_frames(spark, sf_dir)
-    cents = _cent_vals(
-        cent, (spark.sparkContext.applicationId, sf_dir, NCENTROIDS)
-    )
+    emb, cents, assigned, residuals = _residual_frames(spark, sf_dir)
     books = [dict(b) for b in _pq_res_codebooks(spark, sf_dir)]
     coded = _res_coded_cached(spark, sf_dir, residuals, books)
 
@@ -2282,74 +2203,25 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         lit = _dlit_array(tuple(center_vec))
         return F.round(F.lit(1.0) - _cosine(F.col("vec"), lit), 6)
 
-    # r15 adjudication (VERDICT r14 #1): the r14 persist() rewrite
-    # was solo-A/B'd against the r13 eager localCheckpoint on a
-    # quiet box (tools/ab_kernel.py, fresh-JVM interleaved children,
-    # min across 3 spawns): checkpoint 1.80 s vs persist 1.91 s, and
-    # a third stateless "recompute" variant (k growing-LEAST scans)
-    # lost outright at 2.37 s — the in-memory COLUMNAR cache
-    # (de)serializes the 64-double vec array per round, which costs
-    # more than the checkpoint job it saves. Default REVERTED to
-    # checkpoint (the r13 kernel); all three stay selectable via
-    # SPARK_GRAFT_CORESET_KERNEL for re-adjudication, and
-    # tests/test_r14_optimizations.py locks their value identity.
-    coreset_kernel = os.environ.get(
-        "SPARK_GRAFT_CORESET_KERNEL", "checkpoint"
-    )
-    if coreset_kernel == "recompute":
-        dist_cols = [dist_to(seed["vec"])]
-        for rnd in range(1, CORESET_K):
-            mind_expr = dist_cols[0]
-            for d in dist_cols[1:]:
-                mind_expr = F.least(mind_expr, d)
-            nxt = (
-                emb.select("vec_id", "vec", mind_expr.alias("mind"))
-                .orderBy(F.desc("mind"), F.asc("vec_id"))
-                .limit(1)
-                .collect()
-            )[0]
-            chosen.append((rnd, int(nxt["vec_id"]), float(nxt["mind"])))
-            dist_cols.append(dist_to(nxt["vec"]))
-        return spark.createDataFrame(
-            chosen, "sel_round int, vec_id long, coverage_radius double"
-        ).orderBy("sel_round")
-    if coreset_kernel == "checkpoint":
-        mind = emb.select(
-            "vec_id", "vec", dist_to(seed["vec"]).alias("mind")
-        ).localCheckpoint(eager=True)
-        for rnd in range(1, CORESET_K):
-            nxt = (
-                mind.orderBy(F.desc("mind"), F.asc("vec_id"))
-                .limit(1)
-                .collect()
-            )[0]
-            chosen.append((rnd, int(nxt["vec_id"]), float(nxt["mind"])))
-            mind = mind.select(
-                "vec_id",
-                "vec",
-                F.least(F.col("mind"), dist_to(nxt["vec"])).alias("mind"),
-            ).localCheckpoint(eager=True)
-        return spark.createDataFrame(
-            chosen, "sel_round int, vec_id long, coverage_radius double"
-        ).orderBy("sel_round")
+    # eager localCheckpoint per round: a fresh-JVM A/B
+    # (AB_KERNEL_r15.json) measured it at 1.80 s against 1.91 s for
+    # persist() — the in-memory COLUMNAR cache (de)serializes the
+    # 64-double vec array per round, which costs more than the
+    # checkpoint job it saves — and 2.37 s for recomputing k
+    # growing-LEAST scans with no materialization.
     mind = emb.select(
         "vec_id", "vec", dist_to(seed["vec"]).alias("mind")
-    ).persist()
-    stale = None
+    ).localCheckpoint(eager=True)
     for rnd in range(1, CORESET_K):
         nxt = (
             mind.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1).collect()
         )[0]
-        if stale is not None:
-            stale.unpersist()
         chosen.append((rnd, int(nxt["vec_id"]), float(nxt["mind"])))
-        if rnd < CORESET_K - 1:
-            stale, mind = mind, mind.select(
-                "vec_id",
-                "vec",
-                F.least(F.col("mind"), dist_to(nxt["vec"])).alias("mind"),
-            ).persist()
-    mind.unpersist()
+        mind = mind.select(
+            "vec_id",
+            "vec",
+            F.least(F.col("mind"), dist_to(nxt["vec"])).alias("mind"),
+        ).localCheckpoint(eager=True)
     return spark.createDataFrame(
         chosen, "sel_round int, vec_id long, coverage_radius double"
     ).orderBy("sel_round")
@@ -2658,15 +2530,6 @@ def _jacobi_eigenvalues(a: list[list[float]], sweeps: int) -> list[float]:
     return [float(m[i, i]) for i in range(n)]
 
 
-# spectrum cache, keyed (spark application, corpus fingerprint) —
-# the _IVF_CENTROIDS / _PQ_CODEBOOKS discipline applied to the PCA
-# moment fold (r14): the spectrum is bounded model state (n, d, d
-# eigenvalues) consumed by BOTH embedding_pca_topvar and
-# embedding_pca_invariants; without the cache each query re-paid the
-# corpus-sized Gram fold AND the driver-side eigensolve.
-_PCA_SPECTRUM: dict[tuple[str, str, str], tuple[int, int, list[float]]] = {}
-
-
 def _pca_spectrum(
     spark: SparkSession, sf_dir: str
 ) -> tuple[int, int, list[float]]:
@@ -2678,19 +2541,17 @@ def _pca_spectrum(
     Shared by :func:`embedding_pca_topvar` (the spectrum view) and
     :func:`embedding_pca_invariants` (the hash-checkable gate);
     cached per (session, corpus fingerprint) like every other
-    trained-model artifact (see ``_PCA_SPECTRUM``)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        session_cache_key,
+    trained-model artifact: without the cache each query re-paid the
+    corpus-sized Gram fold AND the driver-side eigensolve."""
+    return session_cached(
+        spark, sf_dir, ("embeddings",), "pca_spectrum",
+        lambda _fp: _pca_spectrum_build(spark, sf_dir),
     )
 
-    ckey = session_cache_key(
-        _PCA_SPECTRUM, spark, sf_dir,
-        corpus_fingerprint(sf_dir, "embeddings"),
-    )
-    cached = _PCA_SPECTRUM.get(ckey)
-    if cached is not None:
-        return cached
+
+def _pca_spectrum_build(
+    spark: SparkSession, sf_dir: str
+) -> tuple[int, int, list[float]]:
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     dims = (
         _dim_quantized(spark, sf_dir)
@@ -2718,7 +2579,6 @@ def _pca_spectrum(
     eig = sorted(
         _jacobi_eigenvalues(cov, PCA_JACOBI_SWEEPS), reverse=True
     )
-    _PCA_SPECTRUM[ckey] = (n, d, eig)
     return n, d, eig
 
 
@@ -3089,9 +2949,8 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the production shape. The cache is PRIVATE to the fold:
 # similarity_topk's own bench line stays a fresh measurement, and
 # each gate's approx leg stays fresh (it is the thing under eval).
-# Keyed on the embeddings fingerprint (the session_cache_key
-# discipline) so an in-session corpus rewrite misses.
-_EXACT_TOPK_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Keyed on the embeddings fingerprint so an in-session corpus
+# rewrite misses.
 
 
 def _recall_eval_frame(
@@ -3108,24 +2967,13 @@ def _recall_eval_frame(
     the corpus-sized work happens inside them); the intersection
     join, per-query fold, and query-spine left join are all
     |Q|-bounded. The exact leg is session-cached per corpus
-    fingerprint (see ``_EXACT_TOPK_CACHE``)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        session_cache_key,
+    fingerprint (see the note above)."""
+    exact = session_cached(
+        spark, sf_dir, ("embeddings",), "exact_topk",
+        lambda _fp: similarity_topk(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .localCheckpoint(eager=True),
     )
-
-    key = session_cache_key(
-        _EXACT_TOPK_CACHE, spark, sf_dir,
-        corpus_fingerprint(sf_dir, "embeddings"),
-    )
-    exact = _EXACT_TOPK_CACHE.get(key)
-    if exact is None:
-        exact = (
-            similarity_topk(spark, sf_dir)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
-        )
-        _EXACT_TOPK_CACHE[key] = exact
     approx = approx.select("query_id", "neighbor_id")
     # both sides are |Q|·k rows — broadcast explicitly: the window
     # outputs carry no size statistics, and Catalyst otherwise
@@ -3252,10 +3100,6 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     side-effect of an append). Cell count stays the pinned fixture
     constant (static oracle); production sizes it with
     :func:`ivf_cells` (√n rule)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-    )
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     def build() -> DataFrame:
@@ -3284,10 +3128,6 @@ def ivf_assign_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     production layout would remove by bucketing both sides on
     vec_id). Built once per embeddings fingerprint; delta-maintained
     by :func:`ivf_assign_apply_delta`."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-    )
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     def build() -> DataFrame:
@@ -3320,11 +3160,6 @@ def ivf_occupancy_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists to detect; the reference must be PINNED at train time so
     drift ACCUMULATES against it). ≤ ncells rows — bounded model
     state, same class as the centroid frame."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-    )
-
     def build() -> DataFrame:
         return (
             ivf_assign_index(spark, sf_dir)
@@ -3399,7 +3234,6 @@ def ivf_assign_apply_delta(
     corpus. The %INCR_MOD convention rows of the delta are excluded
     (fingerprint→content invariant) and COUNTED in the report, per
     the no-silent-caps rule (ADVICE r11 on the cosine twin)."""
-    from dbt_eamples_spark.artifacts import load_or_build
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     d_all = delta_embeddings.select(

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbt_eamples_spark.artifacts import (
+    corpus_fingerprint,
+    load_or_build,
+    session_cached,
+)
 from dbt_eamples_spark.catalog import load_table
 
 # tiny per-language stopword lists for the n-gram/stopword vote
@@ -942,8 +947,6 @@ def _bpe_merges_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, persisted under ``_artifacts/bpe_merges/`` (the
     tokenizer-training artifact every downstream token count ships
     with), reused by both the train query and the tokenizer."""
-    from dbt_eamples_spark.artifacts import corpus_fingerprint, load_or_build
-
     fp = corpus_fingerprint(sf_dir, "documents")
     return load_or_build(
         spark, "bpe_merges", fp, lambda: _bpe_train_frame(spark, sf_dir)
@@ -1184,40 +1187,26 @@ def text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact count table is the distributional twin of dedup.doc_shingles
 # — corpus-derived, vocab-bounded, and re-derived per call by every
 # frequency-profile query before round 9. Built once per documents
-# fingerprint; persisted as parquet; L1 session dict on top.
-_SOURCE_TERM_COUNTS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# fingerprint; persisted as parquet; a session entry on top.
 
 
 def _source_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, term, c) — exact per-source unigram counts,
     artifact-backed per documents fingerprint."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents", parallelize=True)
+        return (
+            docs.select("source", F.explode(_tokens_col()).alias("term"))
+            .groupBy("source", "term")
+            .agg(F.count("*").cast("long").alias("c"))
+        )
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SOURCE_TERM_COUNTS_CACHE, spark, sf_dir, fp)
-    df = _SOURCE_TERM_COUNTS_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            docs = load_table(
-                spark, sf_dir, "documents", parallelize=True
-            )
-            return (
-                docs.select(
-                    "source", F.explode(_tokens_col()).alias("term")
-                )
-                .groupBy("source", "term")
-                .agg(F.count("*").cast("long").alias("c"))
-            )
-
-        df = load_or_build(
+    return session_cached(
+        spark, sf_dir, ("documents",), "source_term_counts",
+        lambda fp: load_or_build(
             spark, "source_term_counts", fp, build
-        ).persist()
-        _SOURCE_TERM_COUNTS_CACHE[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,16 +19,10 @@ from dbt_eamples_spark.operators import similarity as V
 def art_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
-    # clear the in-session L1 tiers so the disk tier is exercised
-    D._COSINE_PAIRS_CACHE.clear()
-    V._PQ_CODEBOOKS.clear()
-    G._EDGES_CACHE.clear()
-    G._WEDGES_CACHE.clear()
+    # clear the session tier so the disk tier is exercised
+    A.clear()
     yield str(tmp_path / "arts")
-    D._COSINE_PAIRS_CACHE.clear()
-    V._PQ_CODEBOOKS.clear()
-    G._EDGES_CACHE.clear()
-    G._WEDGES_CACHE.clear()
+    A.clear()
 
 
 def _events(kind):
@@ -76,7 +70,7 @@ class TestCosinePairIndex:
         assert _events("cosine_pairs") == ["build"]
         # simulate a NEW session: drop the L1 dict (the artifact
         # store is what survives a SparkContext)
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear("cosine_pairs")
         second = {
             (r["vec_a"], r["vec_b"])
             for r in D._cosine_pairs_cached(spark, sf_dir).collect()
@@ -87,7 +81,7 @@ class TestCosinePairIndex:
     def test_semantic_clusters_consume_artifact(self, spark, sf_dir, art_dir):
         D.dedup_semantic_clusters(spark, sf_dir).collect()
         assert _events("cosine_pairs") == ["build"]
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear("cosine_pairs")
         D.dedup_semantic_clusters(spark, sf_dir).collect()
         assert _events("cosine_pairs")[-1] == "reuse"
 
@@ -108,7 +102,7 @@ class TestCopurchaseEdgeArtifact:
         G.graph_degree_powerlaw(spark, sf_dir).collect()
         assert _events("copurchase_edges_b") == ["build"]
         # a new session (L1 dropped) reloads the artifact
-        G._EDGES_CACHE.clear()
+        A.clear("copurchase_edges_b")
         second = {
             (r["src"], r["dst"])
             for r in G._copurchase_edges(spark, sf_dir).collect()
@@ -121,7 +115,7 @@ class TestCopurchaseEdgeArtifact:
             (r["src"], r["dst"], r["w"])
             for r in G._copurchase_weighted_edges(spark, sf_dir).collect()
         }
-        G._WEDGES_CACHE.clear()
+        A.clear("copurchase_weighted_edges_b")
         w2 = {
             (r["src"], r["dst"], r["w"])
             for r in G._copurchase_weighted_edges(spark, sf_dir).collect()
@@ -134,7 +128,7 @@ class TestPqCodebookArtifact:
     def test_loaded_books_bit_identical(self, spark, sf_dir, art_dir):
         books1 = V._pq_train_codebooks(spark, sf_dir)
         assert _events("pq_codebooks") == ["build"]
-        V._PQ_CODEBOOKS.clear()
+        A.clear("pq_codebooks")
         books2 = V._pq_train_codebooks(spark, sf_dir)
         assert _events("pq_codebooks") == ["build", "reuse"]
         assert books2 == books1  # float64 survives parquet bit-for-bit
@@ -309,17 +303,9 @@ class TestRound8StageArtifacts:
     span_profile / span_dup_stats / cluster_verdicts (the cascade's
     per-stage verdicts), ngram_jaccard_pairs, triangle_credits."""
 
-    def _fresh(self):
-        D._SPAN_PROFILE_CACHE.clear()
-        D._SPAN_DUP_STATS_CACHE.clear()
-        D._CLUSTER_VERDICTS_CACHE.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
-        G._TRIANGLE_CREDITS_CACHE.clear()
-
     def test_span_profile_built_once_then_reused(
         self, spark, sf_dir, art_dir
     ):
-        self._fresh()
         p1 = {
             (r.doc_id, r.n_spans, r.n_dup_spans)
             for r in D._span_profile(spark, sf_dir).collect()
@@ -328,7 +314,7 @@ class TestRound8StageArtifacts:
         # same session, second consumer: L1 hit, no new event
         D.dedup_substring_spans(spark, sf_dir).collect()
         assert _events("span_profile") == ["build"]
-        D._SPAN_PROFILE_CACHE.clear()
+        A.clear("span_profile")
         p2 = {
             (r.doc_id, r.n_spans, r.n_dup_spans)
             for r in D._span_profile(spark, sf_dir).collect()
@@ -339,12 +325,11 @@ class TestRound8StageArtifacts:
     def test_cascade_reads_persisted_verdicts(
         self, spark, sf_dir, art_dir
     ):
-        self._fresh()
         D.dedup_cascade_attrition(spark, sf_dir).collect()
         built = {k for k, v in A.ARTIFACT_EVENTS if v == "build"}
         assert {"span_profile", "cluster_labels"} <= built
         # a fresh session re-runs the cascade from artifacts alone
-        self._fresh()
+        A.clear()
         A.ARTIFACT_EVENTS.clear()
         D.dedup_cascade_attrition(spark, sf_dir).collect()
         assert all(v == "reuse" for _, v in A.ARTIFACT_EVENTS), (
@@ -354,13 +339,12 @@ class TestRound8StageArtifacts:
     def test_triangle_credits_shared_by_both_views(
         self, spark, sf_dir, art_dir
     ):
-        self._fresh()
         top = G.graph_triangle_count(spark, sf_dir).collect()
         assert _events("triangle_credits") == ["build"]
         glob = G.graph_transitivity(spark, sf_dir).collect()[0]
         assert _events("triangle_credits") == ["build"]  # L1 hit
         # the two views agree: total credits = 3 * triangle count
-        G._TRIANGLE_CREDITS_CACHE.clear()
+        A.clear("triangle_credits")
         credits = G._triangle_credits(spark, sf_dir).collect()
         assert _events("triangle_credits") == ["build", "reuse"]
         assert sum(r.n_triangles for r in credits) == 3 * glob.n_triangles
@@ -371,7 +355,6 @@ class TestRound8StageArtifacts:
     def test_ngram_pairs_shared_with_threshold_curve(
         self, spark, sf_dir, art_dir
     ):
-        self._fresh()
         pairs = {
             (r.doc_a, r.doc_b, r.jaccard)
             for r in D.dedup_ngram_jaccard(spark, sf_dir).collect()
@@ -395,30 +378,22 @@ class TestRound9SharedTokenizeArtifacts:
     builder; the unigram twin `source_term_counts` feeds
     corpus_js_divergence."""
 
-    def _fresh(self):
-        D._DOC_SHINGLES_CACHE.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
-        from dbt_eamples_spark.operators import text as T
-
-        T._SOURCE_TERM_COUNTS_CACHE.clear()
-
     def test_doc_shingles_shared_by_three_consumers(
         self, spark, sf_dir, art_dir
     ):
         from dbt_eamples_spark.operators import text as T
 
-        self._fresh()
         nov = T.text_ngram_novelty(spark, sf_dir).collect()
         assert _events("doc_shingles") == ["build"]
         T.text_jaccard_source_similarity(spark, sf_dir).collect()
         assert _events("doc_shingles") == ["build"]  # L1 hit
         # the pair builder rides the same artifact — a cleared L1
         # falls through to disk reuse, never a second tokenize
-        D._DOC_SHINGLES_CACHE.clear()
+        A.clear("doc_shingles")
         D.dedup_ngram_jaccard(spark, sf_dir).collect()
         assert _events("doc_shingles") == ["build", "reuse"]
         # warm results identical to the cold-build pass
-        self._fresh()
+        A.clear()
         A.ARTIFACT_EVENTS.clear()
         nov2 = T.text_ngram_novelty(spark, sf_dir).collect()
         assert _events("doc_shingles") == ["reuse"]
@@ -428,37 +403,58 @@ class TestRound9SharedTokenizeArtifacts:
     def test_source_term_counts_built_once(self, spark, sf_dir, art_dir):
         from dbt_eamples_spark.operators import text as T
 
-        self._fresh()
         js1 = T.corpus_js_divergence(spark, sf_dir).collect()
         assert _events("source_term_counts") == ["build"]
-        self._fresh()
+        A.clear()
         js2 = T.corpus_js_divergence(spark, sf_dir).collect()
         assert _events("source_term_counts") == ["build", "reuse"]
         assert sorted(map(tuple, js1)) == sorted(map(tuple, js2))
         assert len(js1) > 0
 
-    def test_session_cache_key_evicts_stale_fingerprints(self, spark):
-        """ADVICE r8: the L1 key includes the corpus fingerprint, so
-        an in-session fixture rewrite misses the cache AND evicts
-        (unpersists) the superseded entry."""
+    def test_session_cached_evicts_stale_entries(self, spark, tmp_path):
+        """ADVICE r8: the session key includes the corpus fingerprint,
+        so an in-session rewrite misses the store AND evicts
+        (unpersists) the superseded entry. Eviction is scoped to the
+        entry's own (name, application, dir)."""
+        for sub in ("sf", "other"):
+            (tmp_path / sub).mkdir()
+            (tmp_path / sub / "documents.parquet").write_bytes(b"v1")
+        d, other_dir = str(tmp_path / "sf"), str(tmp_path / "other")
+        built = []
 
-        class _Frame:
-            unpersisted = False
+        def get(name, sf=d, tables=("documents",), payload=None):
+            def make(fp):
+                built.append((name, sf, fp))
+                if payload is not None:
+                    return payload
+                return spark.range(len(built)).persist()
 
-            def unpersist(self):
-                self.unpersisted = True
+            return A.session_cached(spark, sf, tables, name, make)
 
-        cache = {}
-        old = _Frame()
-        app = spark.sparkContext.applicationId
-        cache[(app, "/some/dir", "fp_old")] = old
-        key = A.session_cache_key(cache, spark, "/some/dir", "fp_new")
-        assert key == (app, "/some/dir", "fp_new")
-        assert (app, "/some/dir", "fp_old") not in cache
-        assert old.unpersisted
-        # other dirs are untouched
-        other = _Frame()
-        cache[(app, "/other/dir", "fp_x")] = other
-        A.session_cache_key(cache, spark, "/some/dir", "fp_new")
-        assert (app, "/other/dir", "fp_x") in cache
-        assert not other.unpersisted
+        A.clear()
+        old = get("frames")
+        assert get("frames") is old and len(built) == 1
+        # two names at the same (app, dir, fp) do not evict each other
+        twin = get("twin")
+        assert twin is not old and get("frames") is old
+        assert old.is_cached and twin.is_cached
+        # an entry with no tables (the IVF quantizer) and one of another
+        # dir survive the rewrite below
+        frozen = get("frozen", tables=())
+        elsewhere = get("frames", sf=other_dir)
+        books = get("books", payload=[1, 2])
+        os.utime(os.path.join(d, "documents.parquet"), ns=(1, 1))
+        new = get("frames")
+        assert new is not old and not old.is_cached and new.is_cached
+        assert twin.is_cached and elsewhere.is_cached
+        assert get("frames", sf=other_dir) is elsewhere
+        # a non-DataFrame payload is superseded without an error
+        assert get("books", payload=(3,)) == (3,) and books == [1, 2]
+        n_built = len(built)
+        assert get("frozen", tables=()) is frozen and frozen.is_cached
+        assert len(built) == n_built
+        # clear() drops every entry and unpersists DataFrame payloads
+        A.clear()
+        assert not any(f.is_cached for f in (new, twin, frozen, elsewhere))
+        assert get("frames") is not new and len(built) == n_built + 1
+        A.clear()

@@ -30,20 +30,9 @@ pytestmark = pytest.mark.slow
 def art_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
-    self_caches = [
-        D._NGRAM_PAIRS_CACHE,
-        D._NGRAM_BLOCK_INDEX_CACHE,
-        D._DOC_SHINGLES_CACHE,
-        D._CLUSTER_VERDICTS_CACHE,
-        D._MINHASH_BAND_INDEX_FULL_CACHE,
-        G._EDGES_CACHE,
-        G._TRIANGLE_CREDITS_CACHE,
-    ]
-    for c in self_caches:
-        c.clear()
+    A.clear()
     yield str(tmp_path / "arts")
-    for c in self_caches:
-        c.clear()
+    A.clear()
 
 
 def _events(kind):
@@ -96,11 +85,11 @@ class TestNgramPairsDelta:
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
         A.ARTIFACT_EVENTS.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
+        A.clear("ngram_jaccard_pairs")
         got = _ctr(D.dedup_ngram_jaccard(spark, sf_dir).collect())
         assert _events("ngram_jaccard_pairs") == ["reuse"]
         # and the published table is the rebuild-identical one
-        D._NGRAM_PAIRS_CACHE.clear()
+        A.clear("ngram_jaccard_pairs")
         for p in [os.path.join(art_dir, d) for d in os.listdir(art_dir)
                   if d.startswith("ngram_jaccard_pairs")]:
             import shutil
@@ -146,7 +135,7 @@ class TestTriangleCreditsDelta:
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
         A.ARTIFACT_EVENTS.clear()
-        G._TRIANGLE_CREDITS_CACHE.clear()
+        A.clear("triangle_credits")
         G.graph_triangle_count(spark, sf_dir).collect()
         assert _events("triangle_credits") == ["reuse"]
 
@@ -181,16 +170,14 @@ class TestBandIndexDeltas:
     def test_phash_index_delta(self, spark, sf_dir, tmp_path, art_dir):
         from dbt_eamples_spark.operators import multimodal as M
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
         base_dir, delta = self._split_docs(spark, sf_dir, tmp_path, "pb")
         merged = _ctr(
             M.phash_band_index_apply_delta(
                 spark, base_dir, delta.select("doc_id")
             ).collect()
         )
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear("phash_band_index")
         full = _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
         assert merged == full and len(full) > 0
 
 
@@ -204,30 +191,23 @@ class TestSpanArtifactsDelta:
         base.write.parquet(os.path.join(base_dir, "documents.parquet"))
         return base_dir, delta
 
-    def _fresh(self):
-        D._SPAN_PROFILE_CACHE.clear()
-        D._SPAN_DUP_STATS_CACHE.clear()
-        D._DOC_SPAN_INDEX_CACHE.clear()
-        D._SPAN_HASH_INDEX_CACHE.clear()
-
     def test_delta_merge_equals_full_rebuild(
         self, spark, sf_dir, tmp_path, art_dir
     ):
-        self._fresh()
         base_dir, delta = self._split(spark, sf_dir, tmp_path)
         profile, dup_stats = D.span_artifacts_apply_delta(
             spark, base_dir, delta
         )
         got_p = _ctr(profile.collect())
         got_s = _ctr(dup_stats.collect())
-        self._fresh()
+        A.clear()
         want_p = _ctr(D._span_profile(spark, sf_dir).collect())
         want_s = _ctr(D._span_dup_stats(spark, sf_dir).collect())
         assert got_s == want_s and len(want_s) > 0
         assert got_p == want_p and len(want_p) > 0
         # the split really exercises the singleton-crossing path:
         # some base doc's n_dup_spans changed vs the base-only world
-        self._fresh()
+        A.clear()
         base_p = {
             r.doc_id: r.n_dup_spans
             for r in D._span_profile(spark, base_dir).collect()
@@ -241,14 +221,13 @@ class TestSpanArtifactsDelta:
     def test_publish_makes_full_queries_warm(
         self, spark, sf_dir, tmp_path, art_dir
     ):
-        self._fresh()
         base_dir, delta = self._split(spark, sf_dir, tmp_path)
         fp_full = A.corpus_fingerprint(sf_dir, "documents")
         p, s = D.span_artifacts_apply_delta(
             spark, base_dir, delta, publish_fingerprint=fp_full
         )
         p.collect(), s.collect()
-        self._fresh()
+        A.clear()
         A.ARTIFACT_EVENTS.clear()
         D.dedup_substring_spans(spark, sf_dir).collect()
         kinds = {k for k, e in A.ARTIFACT_EVENTS if e == "build"}
@@ -298,13 +277,12 @@ class TestEmptyDeltaIdentity:
             ).collect()
         ) == _ctr(D.minhash_band_index(spark, sf_dir).collect())
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear("phash_band_index")
         assert _ctr(
             M.phash_band_index_apply_delta(
                 spark, sf_dir, empty_docs.select("doc_id")
             ).collect()
         ) == _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
 
 
 class TestDeltaContracts:
@@ -345,7 +323,6 @@ class TestDeltaContracts:
     ):
         from dbt_eamples_spark.operators import multimodal as M
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
         docs = load_table(spark, sf_dir, "documents")
         base = docs.filter(
             (F.col("doc_id") % 10 != 0) & (F.col("doc_id") % 10 != 7)
@@ -362,9 +339,8 @@ class TestDeltaContracts:
                 spark, base_dir, delta.select("doc_id")
             ).collect()
         )
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear("phash_band_index")
         full = _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
         assert merged == full and len(full) > 0
 
     def test_ngram_delta_reingest_raises(
@@ -463,7 +439,7 @@ class TestClusterVerdictsDelta:
             301: (101, False),
         }
         # and that is exactly the from-scratch union rebuild
-        D._DOC_SHINGLES_CACHE.clear()
+        A.clear("doc_shingles")
         full = {
             r.doc_id: (r.cluster_id, r.keep)
             for r in D.dedup_clusters(spark, union_dir)
@@ -485,7 +461,7 @@ class TestClusterVerdictsDelta:
         D.cluster_verdicts_apply_delta(
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
-        D._CLUSTER_VERDICTS_CACHE.clear()
+        A.clear("cluster_labels")
         A.ARTIFACT_EVENTS.clear()
         D.corpus_keep_list(spark, sf_dir).collect()
         built = {k for k, v in A.ARTIFACT_EVENTS if v == "build"}

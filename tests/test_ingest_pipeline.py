@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.catalog import load_table
 from dbt_eamples_spark.operators import dedup as D
-from dbt_eamples_spark.operators import graph as G
 from dbt_eamples_spark.operators import multimodal as M
 from dbt_eamples_spark.streaming import ingest as I
 
@@ -43,30 +42,13 @@ def _ctr(rows):
     )
 
 
-def _clear_l1():
-    for c in [
-        D._DOC_SHINGLES_CACHE,
-        D._NGRAM_PAIRS_CACHE,
-        D._NGRAM_BLOCK_INDEX_CACHE,
-        D._CLUSTER_VERDICTS_CACHE,
-        D._MINHASH_BAND_INDEX_FULL_CACHE,
-        D._SPAN_PROFILE_CACHE,
-        D._SPAN_DUP_STATS_CACHE,
-        D._DOC_SPAN_INDEX_CACHE,
-        D._SPAN_HASH_INDEX_CACHE,
-        M._PHASH_BAND_INDEX_CACHE,
-        G._EDGES_CACHE,
-    ]:
-        c.clear()
-
-
 @pytest.fixture()
 def art_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
-    _clear_l1()
+    A.clear()
     yield str(tmp_path / "arts")
-    _clear_l1()
+    A.clear()
 
 
 # builders that read the current corpus state from scratch, by kind
@@ -114,7 +96,7 @@ class TestIngestPipeline:
 
         # (b) batch-1 probe == minhash pairs of the corpus-as-of-now
         # restricted to pairs involving batch-1 docs
-        _clear_l1()
+        A.clear()
         b1_ids = {r.doc_id for r in b1.select("doc_id").collect()}
         full_now = D.dedup_minhash(spark, corpus_dir).collect()
         want = sum(
@@ -129,7 +111,7 @@ class TestIngestPipeline:
         # maintenance must see only the truly-new rows. Every base
         # read must be WARM (published by batch 1).
         A.ARTIFACT_EVENTS.clear()
-        _clear_l1()
+        A.clear()
         r2 = I.ingest_documents_batch(
             spark, b1.unionByName(b2), corpus_dir,
             maintain_artifacts=True,
@@ -165,7 +147,7 @@ class TestIngestPipeline:
         os.environ["SPARK_GRAFT_ARTIFACTS"] = str(
             tmp_path / "arts_scratch"
         )
-        _clear_l1()
+        A.clear()
         try:
             for kind in I.DOCUMENT_ARTIFACT_KINDS:
                 want = _ctr(_BUILDERS[kind](spark, corpus_dir).collect())
@@ -175,7 +157,7 @@ class TestIngestPipeline:
                 assert len(want) > 0, kind
         finally:
             os.environ["SPARK_GRAFT_ARTIFACTS"] = art_dir
-            _clear_l1()
+            A.clear()
 
         # (c) re-delivering both batches is a no-op
         A.ARTIFACT_EVENTS.clear()
@@ -223,14 +205,14 @@ class TestIngestPipeline:
         os.environ["SPARK_GRAFT_ARTIFACTS"] = str(
             tmp_path / "arts_scratch_dup"
         )
-        _clear_l1()
+        A.clear()
         try:
             for kind, inc in got.items():
                 want = _ctr(_BUILDERS[kind](spark, corpus_dir).collect())
                 assert inc == want, kind
         finally:
             os.environ["SPARK_GRAFT_ARTIFACTS"] = art_dir
-            _clear_l1()
+            A.clear()
 
     def test_streaming_form(self, spark, sf_dir, tmp_path, art_dir):
         """The foreachBatch wrapper drains the source with
@@ -486,7 +468,7 @@ class TestHousekeeping:
             .select("doc_id").collect()
         )
         for b in batches[1:]:
-            _clear_l1()
+            A.clear()
             A.ARTIFACT_EVENTS.clear()
             r = I.ingest_documents_batch(
                 spark, b, corpus_dir, maintain_artifacts=True,

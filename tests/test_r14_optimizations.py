@@ -227,25 +227,6 @@ def test_min_label_propagation_kernels_equivalent(
         assert got == _uf_components(pairs), f"{kernel}:{name}"
 
 
-def test_coreset_kernels_value_identical(spark, sf_dir, monkeypatch):
-    """The three SPARK_GRAFT_CORESET_KERNEL materializations
-    (persist / checkpoint / recompute) must pick the identical
-    centers with identical radii: same expressions, same left-fold
-    LEAST order — the r15 adjudication keeps all three selectable."""
-    from dbt_eamples_spark.operators.similarity import (
-        sample_coreset_kcenter,
-    )
-
-    rows = {}
-    for kernel in ("persist", "checkpoint", "recompute"):
-        monkeypatch.setenv("SPARK_GRAFT_CORESET_KERNEL", kernel)
-        rows[kernel] = [
-            (r.sel_round, r.vec_id, repr(r.coverage_radius))
-            for r in sample_coreset_kcenter(spark, sf_dir).collect()
-        ]
-    assert rows["persist"] == rows["checkpoint"] == rows["recompute"]
-
-
 def test_min_label_propagation_random_graphs(spark):
     random.seed(99)
     for trial in range(3):
